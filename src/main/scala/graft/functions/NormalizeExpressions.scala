@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Semantics are byte-identical to ArabicNormalizer.normalizeBasic /
   * normalizeEnhanced (reference: scripts/all-pdf-to-json-smart.py:
   * 187-203 and all-pdf-to-json-smart-structured.py:324-345); the
-  * equivalence of all four twin forms (Scala regex, Scala single-pass,
-  * Column built-ins, native expression) is property-tested.
+  * equivalence of all three twin forms (Scala regex, Scala
+  * single-pass, native expression) is property-tested.
   */
 abstract class NormalizeArabicExpr extends UnaryExpression {
   override def dataType: DataType = StringType

@@ -162,9 +162,13 @@ object CompactLake {
     // recover-on-entry (r06 advice): a crash between the two swap
     // renames below leaves `dir` missing and the source stranded in
     // `.compact-old` — restore it before listing so the re-run
-    // compacts the full source instead of failing on a missing dir
+    // compacts the full source instead of failing on a missing dir.
+    // When `dir` exists, any `.compact-old` is stale (a crash after the
+    // swap-in, before its delete): drop it now rather than leave a full
+    // copy of the data beside the live dir until the next swap.
     val oldDir = new Path(dir + ".compact-old")
-    if (!fs.exists(new Path(dir)) && fs.exists(oldDir))
+    if (fs.exists(new Path(dir))) fs.delete(oldDir, true)
+    else if (fs.exists(oldDir))
       require(fs.rename(oldDir, new Path(dir)),
         s"crash recovery failed: cannot restore $oldDir to $dir")
     val files = fs.listStatus(new Path(dir))
@@ -194,11 +198,9 @@ object CompactLake {
       fs.rename(part.head.getPath, new Path(out, f"part-bin-$i%05d.parquet"))
     }
     fs.delete(tmp, true)
-    val old = new Path(dir + ".compact-old")
-    fs.delete(old, true)
-    require(fs.rename(new Path(dir), old), s"swap failed for $dir")
+    require(fs.rename(new Path(dir), oldDir), s"swap failed for $dir")
     require(fs.rename(out, new Path(dir)), s"swap-in failed for $dir")
-    fs.delete(old, true)
+    fs.delete(oldDir, true)
     (files.length, big.length + bins.length)
   }
 }

@@ -290,14 +290,10 @@ object Similarity {
       sequence(lit(0), lit(centroids.length - 1)),
       (d, i) => call_function("named_struct", lit("d"), d, lit("cell"), i))
 
-  /** Nearest-centroid cell id, Catalyst-HOF reference form (argmin via
-    * struct array_min) — the property-tested twin of the native
-    * expression below, NOT the hot path.
+  /** The `nProbe` nearest cells, Catalyst-HOF reference form — the
+    * property-tested twin of the native expression below, NOT the hot
+    * path.
     */
-  def ivfCellColRef(emb: Column, centroids: Array[(Int, Array[Double])]): Column =
-    array_min(cellStructsCol(emb, centroids)).getField("cell")
-
-  /** The `nProbe` nearest cells, HOF reference form (twin). */
   def ivfProbeCellsColRef(emb: Column, centroids: Array[(Int, Array[Double])], nProbe: Int): Column =
     transform(slice(array_sort(cellStructsCol(emb, centroids)), 1, nProbe),
       s => s.getField("cell"))

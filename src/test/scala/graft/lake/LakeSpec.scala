@@ -135,6 +135,22 @@ class LakeSpec extends AnyFunSuite {
     val afterFiles = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(afterFiles.length == nAfter)
+    // a stale `.compact-old` beside the live dir (crash after the
+    // swap-in, before its delete) is dropped on entry: even a run that
+    // then aborts before its own swap (targetBytes 0 fails bin
+    // planning) must not leave the stale copy behind, and a full run
+    // must not let its rows leak into the live dir
+    val stale = new java.io.File(dir + ".compact-old")
+    def plantStale(): Unit = spark.range(5000, 5010)
+      .select(col("id"), lit("stale").as("text")).write.parquet(stale.toString)
+    plantStale()
+    intercept[IllegalArgumentException](CompactLake.compact(spark, dir, targetBytes = 0L))
+    assert(!stale.exists(), "stale .compact-old must be removed on entry")
+    plantStale()
+    CompactLake.compact(spark, dir, fileSize * 8)
+    assert(!stale.exists(), "stale .compact-old must not survive a compaction")
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == before,
+      "a stale leftover must not change a single live row")
     // a file already >= target passes through byte-identical
     val dir2 = Files.createTempDirectory("graft-compact2").toString + "/t"
     spark.range(0, 1000).toDF("id").coalesce(1).write.parquet(dir2)

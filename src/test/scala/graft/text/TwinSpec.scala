@@ -26,24 +26,6 @@ class TwinSpec extends AnyFunSuite {
     }
   }
 
-  test("normalizeBasic: Scala twin == Column twin on 400 adversarial strings") {
-    val inputs = randomStrings(400)
-    val got = inputs.toDF("s")
-      .select(ArabicNormalizer.normalizeBasicCol(col("s")).as("n")).as[String].collect()
-    inputs.zip(got).foreach { case (in, colResult) =>
-      assert(ArabicNormalizer.normalizeBasic(in) == colResult, s"input=${in.map(c => f"U+${c.toInt}%04x").mkString(",")}")
-    }
-  }
-
-  test("normalizeEnhanced: Scala twin == Column twin") {
-    val inputs = randomStrings(400)
-    val got = inputs.toDF("s")
-      .select(ArabicNormalizer.normalizeEnhancedCol(col("s")).as("n")).as[String].collect()
-    inputs.zip(got).foreach { case (in, colResult) =>
-      assert(ArabicNormalizer.normalizeEnhanced(in) == colResult, s"input=$in")
-    }
-  }
-
   test("single-pass twins: normalize*Fast == regex forms on adversarial strings") {
     val extra = Seq("", "\f", "\r\n", "ًٌّ", " ً ", "ـً", "؟؟", "aً\fb",
       // control chars are not \s but String.trim strips them at edges
@@ -143,8 +125,8 @@ class TwinSpec extends AnyFunSuite {
     assert(err.getMessage.contains("LITERAL"), s"unhelpful error: ${err.getMessage}")
     // and wrong arity names the function, not an index
     val err2 = intercept[Exception](
-      spark.sql("SELECT minhash_signature(array('a'))").collect())
-    assert(err2.getMessage.contains("minhash_signature takes 2"), s"got: ${err2.getMessage}")
+      spark.sql("SELECT minhash_poly_buckets(array('a'))").collect())
+    assert(err2.getMessage.contains("minhash_poly_buckets takes 3"), s"got: ${err2.getMessage}")
   }
 
   test("normalization idempotence: enhanced always; basic modulo its double-space quirk") {
